@@ -202,7 +202,7 @@ BENCH_QUERIES = [
     "quality_suite_orders",        # Deequ-style one-pass constraint gate
     "jl_projection_embeddings",    # JL Rademacher projection, narrow codegen
     "conformal_orders_price",      # split-conformal grid-quantile intervals
-    "als_recommend_parts",         # rank-4 ALS, vectorized Arrow solves
+    "als_recommend_parts",         # rank-4 ALS, JVM Cholesky solves
     "stl_decompose_hourly",        # dense-grid STL-lite decomposition
     "kmeans_silhouette",           # O(k)-per-point cluster quality
     "versioned_bloom_point_lookup",  # per-file Bloom index point skip

@@ -351,3 +351,21 @@ def test_markov_transitions_exact_matrix(spark):
     # lead pairing is per user: no cross-user (b -> a) leak from
     # user1's trailing b into user2's first a
     assert sum(n for (c, _), (n, _) in got.items() if c == "b") == 1
+
+
+def test_bfs_distances_rows_both_state_paths(spark):
+    # the broadcast-state fixture graph: the frontier empties at hop 4,
+    # before max_hops=6 (early exit), and exactly at max_hops=3
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (0, 4), (4, 5), (5, 6), (2, 6),
+         (6, 7), (1, 7)], "u long, v long")
+    want = {0: 0, 1: 1, 4: 1, 2: 2, 3: 2, 5: 2, 7: 2, 6: 3}
+    for broadcast_state in (False, True):
+        for max_hops in (3, 6):
+            rows = bfs_distances(edges, max_hops=max_hops,
+                                 broadcast_state=broadcast_state).collect()
+            assert len(rows) == len(want)          # no node twice
+            assert {r.node: r.dist for r in rows} == want
+    capped = {r.node: r.dist
+              for r in bfs_distances(edges, max_hops=1).collect()}
+    assert capped == {0: 0, 1: 1, 4: 1}

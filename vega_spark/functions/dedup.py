@@ -1101,8 +1101,11 @@ def mine_duplicate_spans(df: DataFrame, text_col: str, id_col: str,
     if est_text_bytes:
         import math
         n = min(4096, math.ceil(est_text_bytes * 44 / 6 / (128 << 20)))
-        spark = df.sparkSession
-        if n > int(spark.conf.get("spark.sql.shuffle.partitions")):
+        # the session value may be unset or non-numeric ("auto" on
+        # some platforms); compare against Spark's default then
+        cur = df.sparkSession.conf.get("spark.sql.shuffle.partitions",
+                                       "200")
+        if n > (int(cur) if cur.strip().isdigit() else 200):
             # explicit hash repartition on the digest: the window
             # below reuses this partitioning (ClusteredDistribution
             # satisfied), so this IS the one corpus-wide exchange,

@@ -266,11 +266,14 @@ def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
     ≤ nodes, edges side is the big one — AQE broadcasts the frontier
     while it fits) → distinct new nodes → anti-join against visited.
     Both per-hop shuffles are keyed by node id; no global window, no
-    cartesian. The visited set is localCheckpoint-ed every hop so
-    lineage stays O(1) and each hop's anti-join reads a materialized
-    frame instead of replaying all prior hops. Early-exits when a
-    frontier comes back empty (one cheap isEmpty job per hop — the
-    standard Pregel-style driver loop).
+    cartesian. Each new frontier is localCheckpoint-ed once, and the
+    visited set is the union of the materialized frontiers: lineage
+    stays one hop deep, each hop's anti-join reads materialized
+    blocks instead of replaying prior hops, and a hop writes only
+    its new nodes (re-checkpointing ``visited`` would copy the whole
+    growing set every hop). Early-exits when a frontier comes back
+    empty (one cheap isEmpty job per hop — the standard Pregel-style
+    driver loop).
 
     ``broadcast_state`` (r10 opt, size-gated by the CALLER): hint
     both node-sized state frames — the frontier on the expansion
@@ -283,8 +286,9 @@ def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
     if source is None:
         source = sym.agg(F.min("u").alias("node"))
     with _loop_ctx(sym, broadcast_state):
-        frontier = source.select("node", F.lit(0).alias("dist"))
-        visited = frontier.localCheckpoint(eager=True)
+        frontier = (source.select("node", F.lit(0).alias("dist"))
+                    .localCheckpoint(eager=True))
+        visited = frontier
         for h in range(1, max_hops + 1):
             f = F.broadcast(frontier) if broadcast_state else frontier
             seen = visited.select("node")
@@ -296,7 +300,7 @@ def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
             frontier = nxt.localCheckpoint(eager=True)
             if frontier.isEmpty():
                 break
-            visited = visited.union(frontier).localCheckpoint(eager=True)
+            visited = visited.union(frontier)
     return visited
 
 

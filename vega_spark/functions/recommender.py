@@ -7,27 +7,29 @@ Scale shape — the part that matters at 100 TB of interactions:
 
 - Each half-iteration is ONE equi-join (ratings ⋈ current factors on
   the fixed side's key) + ONE keyed aggregation to the solving
-  side's key. The aggregation carries only the r² + r normal-equation
-  sufficient statistics per entity (r = rank, so ~20 doubles at
-  r = 4) — interactions are never collected, factors never pass
-  through the driver.
-- The per-entity r x r solve is a VECTORIZED Arrow-batched kernel:
-  numpy's stacked ``linalg.solve`` handles a whole batch of entities
-  in one BLAS call. Driver work is zero; solver work is O(r³) per
-  entity, embarrassingly parallel.
+  side's key. The aggregation carries only the r(r+1)/2 + r
+  normal-equation sufficient statistics per entity (r = rank, so 14
+  doubles at r = 4; A is symmetric) — interactions are never
+  collected, factors never pass through the driver.
+- The per-entity r x r solve is a Cholesky factorisation unrolled
+  over the static rank into SQL expressions, planned as projections
+  over the aggregate's output: it runs in the aggregate's stage, on
+  the JVM, with no Python worker and no Arrow round trip. Driver
+  work is zero; solver work is O(r³) per entity, embarrassingly
+  parallel.
 - Factor init is md5-deterministic (no RNG state), so reruns —
   and any-engine replays of the init — are bit-stable.
 
 The iteration itself is float least squares, so (like k-means) the
-registry entry is rows-only: SQL cannot express the stacked solve.
+registry entry is rows-only: the oracle does not replay the solves.
 Property tests pin the math: training RMSE decreases monotonically
 and an exactly low-rank matrix is recovered to ~1e-2.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,14 +64,51 @@ def _dot(a: str, b: str, rank: int):
     left fold it replaces (IEEE: 0.0 + x == x), but whole-stage
     codegen'd instead of interpreted per row (measured 2.6x on the
     RMSE pass)."""
-    from functools import reduce
     return reduce(lambda x, y: x + y,
                   [F.col(a)[i] * F.col(b)[i] for i in range(rank)])
 
 
-def _infer_rank(factors: DataFrame) -> int:
-    """Factor rank from one row (frames are tiny and checkpointed)."""
-    return len(factors.select("f").first()["f"])
+def _cholesky_solve(stats: DataFrame, rank: int, reg: float) -> DataFrame:
+    """Solve ``(A + reg·I) x = b`` per row of ``stats`` — columns
+    ``id``, the lower triangle ``a{i}_{j}`` (j <= i) of the symmetric
+    A, and ``b{i}`` — returning ``(id long, f array<double>)``.
+
+    A = Σ y yᵀ is positive semi-definite, so A + reg·I is positive
+    definite for reg > 0 and its Cholesky factor L (A + reg·I = L Lᵀ)
+    exists without pivoting. Each column j of L is one projection
+    over the previous ones, and so is each component of x, so every
+    expression stays linear in the rank (nesting them in one
+    projection grows ~5x per rank: 636 expression nodes at rank 4,
+    16k at rank 6). Row ``b`` rides along as a last row of the
+    factor: for the bordered matrix [[A, b], [bᵀ, ·]] that row is
+    z = L⁻¹b, the forward substitution. Back substitution Lᵀ x = z
+    then runs from the last component up. All projections fuse into
+    the aggregate's codegen stage. They are SQL text, one py4j call
+    each: built from Column objects, the same solve costs ~2000
+    driver round trips at rank 4."""
+    def minus(head: str, terms: list[tuple[str, str]]) -> str:
+        """``(head - p1 * q1 - p2 * q2 ...)`` as SQL text."""
+        return "(" + head + "".join(f" - {p} * {q}" for p, q in terms) + ")"
+
+    def lrow(i: int, j: int) -> list[tuple[str, str]]:
+        """Products l[i,k]·l[j,k] for k < j (row i against row j)."""
+        return [(f"l{i}_{k}", f"l{j}_{k}") for k in range(j)]
+
+    reg_sql = f"CAST({float(reg)!r} AS DOUBLE)"
+    for j in range(rank):
+        l_jj = "sqrt" + minus(f"(a{j}_{j} + {reg_sql})", lrow(j, j))
+        col_j = [f"{l_jj} AS l{j}_{j}"]
+        col_j += [f"{minus(f'a{i}_{j}', lrow(i, j))} / {l_jj} AS l{i}_{j}"
+                  for i in range(j + 1, rank)]
+        z_terms = [(f"z{k}", f"l{j}_{k}") for k in range(j)]
+        col_j.append(f"{minus(f'b{j}', z_terms)} / {l_jj} AS z{j}")
+        stats = stats.selectExpr("*", *col_j)
+    for i in reversed(range(rank)):
+        x_terms = [(f"l{k}_{i}", f"x{k}") for k in range(i + 1, rank)]
+        stats = stats.selectExpr(
+            "*", f"{minus(f'z{i}', x_terms)} / l{i}_{i} AS x{i}")
+    xs = ", ".join(f"x{i}" for i in range(rank))
+    return stats.selectExpr("CAST(id AS BIGINT) AS id", f"array({xs}) AS f")
 
 
 def _solve_side(ratings: DataFrame, solve_key: str, fixed_key: str,
@@ -77,52 +116,35 @@ def _solve_side(ratings: DataFrame, solve_key: str, fixed_key: str,
                 rank: int, reg: float,
                 broadcast_fixed: bool | None = None) -> DataFrame:
     """One ALS half-step: normal-equation sums per ``solve_key``
-    entity, then a batched r x r solve.
+    entity, then the per-entity r x r solve (``_cholesky_solve``) in
+    the same stage as the aggregate.
 
-    The fixed-factor side is broadcast when small: mapInPandas
-    output carries no stats, so AQE cannot see that the factor frame
-    is tiny and otherwise plans 4 shuffle joins of the full ratings
-    frame per training run (measured 7.5s -> 4.1s at sf0.1).
-    ``broadcast_fixed`` is decided ONCE per training run by
+    The fixed-factor side is broadcast when small: the factor frame
+    is a checkpoint whose size estimate is inherited from the
+    ratings-sized aggregate that produced it, so the planner cannot
+    see that it is tiny and otherwise plans 4 shuffle joins of the
+    full ratings frame per training run (measured 7.5s -> 4.1s at
+    sf0.1). ``broadcast_fixed`` is decided ONCE per training run by
     als_explicit (factor-frame row count == entity count, already
-    known there — r5 ADVICE: a count() per half-step is 2·iters
-    extra jobs, and on a non-localCheckpointed frame it re-executes
-    the full lineage). None (direct library callers) falls back to
-    the adaptive count check."""
+    known there — a count() per half-step is 2·iters extra jobs, and
+    on a non-localCheckpointed frame it re-executes the full
+    lineage). None (direct library callers) falls back to the
+    adaptive count check."""
     ff = fixed_factors.withColumnRenamed("id", fixed_key)
     if broadcast_fixed is None:
         broadcast_fixed = fixed_factors.count() <= _BCAST_FACTOR_ROWS
     if broadcast_fixed:
         ff = F.broadcast(ff)
     joined = ratings.join(ff, fixed_key)
-    # flattened y yᵀ (r² cols) and r·y (r cols) per interaction —
-    # static column list, one keyed aggregate
-    aggs = []
-    for i in range(rank):
-        for j in range(rank):
-            aggs.append(F.sum(F.col("f")[i] * F.col("f")[j])
-                        .alias(f"a{i}_{j}"))
-    for i in range(rank):
-        aggs.append(F.sum(F.col(rating_col) * F.col("f")[i])
-                    .alias(f"b{i}"))
-    stats = joined.groupBy(F.col(solve_key).alias("id")).agg(*aggs)
-
-    acols = [f"a{i}_{j}" for i in range(rank) for j in range(rank)]
-    bcols = [f"b{i}" for i in range(rank)]
-
-    def solve(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            A = pdf[acols].to_numpy().reshape(-1, rank, rank)
-            A = A + reg * np.eye(rank)[None, :, :]
-            b = pdf[bcols].to_numpy().reshape(-1, rank, 1)
-            x = np.linalg.solve(A, b)[:, :, 0]
-            yield pd.DataFrame({"id": pdf["id"],
-                                "f": [list(map(float, r)) for r in x]})
-
-    schema = "id long, f array<double>"
-    return stats.mapInPandas(solve, schema)
+    # lower triangle of y yᵀ (A is symmetric: r(r+1)/2 cols) and r·y
+    # (r cols) per interaction — static column list, one keyed
+    # aggregate, written as SQL text for one py4j call per column
+    aggs = [f"sum(f[{i}] * f[{j}]) AS a{i}_{j}"
+            for i in range(rank) for j in range(i + 1)]
+    aggs += [f"sum(`{rating_col}` * f[{i}]) AS b{i}" for i in range(rank)]
+    stats = (joined.groupBy(F.col(solve_key).alias("id"))
+             .agg(*map(F.expr, aggs)))
+    return _cholesky_solve(stats, rank, reg)
 
 
 def als_explicit(ratings: DataFrame, user_col: str, item_col: str,
@@ -149,7 +171,13 @@ def als_explicit(ratings: DataFrame, user_col: str, item_col: str,
     ``StorageLevel.DISK_ONLY`` trades a page-cache-friendly disk
     scan for zero storage-memory pressure (the default in-memory
     copies OOMed a single 16 GiB JVM at the 300x smoke: 3x the fact
-    table pinned). None = the engine's localCheckpoint default."""
+    table pinned). None = the engine's localCheckpoint default.
+
+    ``reg`` must be > 0: it is what makes every per-entity system
+    positive definite (an entity with fewer interactions than
+    ``rank`` has a singular A), so it is checked before any job."""
+    if not reg > 0:
+        raise ValueError(f"als_explicit needs reg > 0, got {reg!r}")
     items = ratings.select(F.col(item_col)).distinct()
     yi = _init_factors(items, item_col, rank, seed).localCheckpoint()
     # Two co-partitioned ratings copies (r8, the MLlib in/out-block
@@ -235,39 +263,40 @@ def als_explicit(ratings: DataFrame, user_col: str, item_col: str,
     return xu, yi
 
 
-def als_rmse(ratings: DataFrame, user_col: str, item_col: str,
-             rating_col: str, xu: DataFrame, yi: DataFrame) -> float:
-    """Training RMSE of the factorization (diagnostic)."""
-    rank = _infer_rank(xu)
+def _mse(ratings: DataFrame, user_col: str, item_col: str,
+         rating_col: str, xu: DataFrame, yi: DataFrame,
+         rank: int) -> DataFrame:
+    """One-row frame: ``mse``, the mean squared training error over
+    ``ratings`` ⋈ both factor frames."""
     j = (ratings
          .join(xu.withColumnRenamed("id", user_col)
                .withColumnRenamed("f", "fu"), user_col)
          .join(yi.withColumnRenamed("id", item_col)
                .withColumnRenamed("f", "fi"), item_col))
-    dot = _dot("fu", "fi", rank)
-    err = j.agg(F.avg(F.pow(F.col(rating_col) - dot, 2))).collect()[0][0]
-    return float(err) ** 0.5
+    return j.agg(F.avg(F.pow(F.col(rating_col) - _dot("fu", "fi", rank),
+                             2)).alias("mse"))
+
+
+def als_rmse(ratings: DataFrame, user_col: str, item_col: str,
+             rating_col: str, xu: DataFrame, yi: DataFrame, *,
+             rank: int) -> float:
+    """Training RMSE of the factorization (diagnostic). ``rank`` is
+    the one the factors were trained with."""
+    mse = _mse(ratings, user_col, item_col, rating_col, xu, yi, rank)
+    return float(mse.collect()[0]["mse"]) ** 0.5
 
 
 def als_rmse_vs_baseline(ratings: DataFrame, user_col: str,
                          item_col: str, rating_col: str,
-                         xu: DataFrame, yi: DataFrame
+                         xu: DataFrame, yi: DataFrame, *, rank: int
                          ) -> tuple[float, float]:
     """Training RMSE and the global-mean predictor's RMSE
     (= stddev_pop of the ratings) in ONE action — the two scalars
-    als-contract queries compare were two separate collect jobs
-    (r9 opt, guide §5: scalar aggregates that feed one decision
-    belong in one job). Each aggregate is computed over exactly the
-    same frame/expressions as before; the crossJoin of two
-    single-row aggregates changes neither value."""
-    rank = _infer_rank(xu)
-    j = (ratings
-         .join(xu.withColumnRenamed("id", user_col)
-               .withColumnRenamed("f", "fu"), user_col)
-         .join(yi.withColumnRenamed("id", item_col)
-               .withColumnRenamed("f", "fi"), item_col))
-    dot = _dot("fu", "fi", rank)
-    row = (j.agg(F.avg(F.pow(F.col(rating_col) - dot, 2)).alias("mse"))
+    als-contract queries compare. Each aggregate is computed over
+    exactly the same frame/expressions as the separate jobs would;
+    the crossJoin of two single-row aggregates changes neither
+    value. ``rank`` is the one the factors were trained with."""
+    row = (_mse(ratings, user_col, item_col, rating_col, xu, yi, rank)
            .crossJoin(ratings.agg(
                F.stddev_pop(rating_col).alias("sd")))
            .collect()[0])
@@ -276,17 +305,17 @@ def als_rmse_vs_baseline(ratings: DataFrame, user_col: str,
 
 def recommend_top_k(ratings: DataFrame, user_col: str, item_col: str,
                     xu: DataFrame, yi: DataFrame, users: DataFrame,
-                    k: int = 3) -> DataFrame:
+                    k: int = 3, *, rank: int) -> DataFrame:
     """Top-k unseen items for the given (bounded) user set: broadcast
     the selected user factors across the item-factor frame (narrow
     score pass over items — never a users x items blowup), anti-join
     the already-seen pairs, per-user heap via row_number. Ties break
-    on item id — deterministic output."""
+    on item id — deterministic output. ``rank`` is the one the
+    factors were trained with."""
     from pyspark.sql.window import Window
 
     sel = (users.join(xu.withColumnRenamed("id", user_col), user_col)
            .withColumnRenamed("f", "fu"))
-    rank = _infer_rank(xu)
     # drop the factor arrays the moment the dot is computed: the
     # anti-join below otherwise shuffles |users| x |items| rows each
     # carrying BOTH rank-length arrays (~50 GB at the 100x smoke for

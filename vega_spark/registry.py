@@ -7324,7 +7324,8 @@ def als_recommend_parts_q(spark, sf_dir):
     """ALS collaborative filtering end to end: implicit
     (customer, part, quantity) interactions from orders ⋈ lineitem,
     rank-4 factorization (2 alternations — each ONE join + ONE
-    keyed r²-stat aggregate + a vectorized Arrow solve), then top-3
+    keyed normal-equation aggregate with the per-entity Cholesky
+    solve in the same stage, as JVM expressions), then top-3
     unseen-part recommendations for the bounded custkey<25 user set.
 
     Contract surface (float least squares isn't SQL-expressible, but
@@ -7381,11 +7382,12 @@ def als_recommend_parts_q(spark, sf_dir):
                  .localCheckpoint(eager=True)))
     recs, (rmse, base) = X_run_overlapped(
         lambda: recommend_top_k(ratings, "user", "item", xu, yi,
-                                users, k=3).localCheckpoint(eager=True),
+                                users, k=3, rank=4
+                                ).localCheckpoint(eager=True),
         # one action for both scalars (r9 opt: was an RMSE collect +
         # a separate stddev collect — same expressions, fused job)
         lambda: als_rmse_vs_baseline(ratings, "user", "item", "r",
-                                     xu, yi))
+                                     xu, yi, rank=4))
 
     from pyspark.sql.window import Window
     w = Window.partitionBy("user").orderBy("rk")
@@ -7434,7 +7436,8 @@ def als_recommend_parts_op(spark, sf_dir):
                           else li_rows > 5_000_000,
                           copart_storage=StorageLevel.DISK_ONLY)
     users = ratings.select("user").distinct().filter(F.col("user") < 25)
-    return recommend_top_k(ratings, "user", "item", xu, yi, users, k=3)
+    return recommend_top_k(ratings, "user", "item", xu, yi, users, k=3,
+                           rank=4)
 
 
 @_q("versioned_bloom_point_lookup", """

@@ -292,8 +292,10 @@ def release_local_checkpoint(df) -> None:
     measured anywhere from 15s to 112s at the 100x smoke depending on
     that accumulated pressure. Iterative operators (ALS, k-means,
     graph loops) must release frame N-1 as soon as frame N is
-    materialized; block loss after release only re-lengthens lineage
-    on failure, never changes results.
+    materialized, and only once nothing will read frame N-1 again: a
+    ``localCheckpoint`` keeps no lineage to recompute from, so a job
+    that reads a released (or otherwise lost — e.g. on executor loss)
+    checkpoint block fails; it does not fall back to recomputation.
 
     No-op (never raises) if the frame is not a checkpoint — py4j
     internals are version-sensitive, and a missed release is a perf
